@@ -62,21 +62,116 @@ class VectorStore private (val spark: SparkSession, val path: String,
     * case (r15 ADVICE: the previous 64 MB ceiling admitted multi-
     * hundred-MB broadcasts just under the line). */
   private val SidecarBroadcastMaxBytes = 16L * 1024 * 1024
-  private def dropSidecarTombs(table: DataFrame, tombPath: String,
-                               idCol: String = "id"): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(tombPath)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(f.makeQualified(p))) table
-    else {
-      val tombs = spark.read.parquet(tombPath)
-        .select(col("id").as("__tomb_id")).distinct()
-      val side =
-        if (f.getContentSummary(f.makeQualified(p)).getLength
-              <= SidecarBroadcastMaxBytes) broadcast(tombs)
-        else tombs
-      table.join(side, col(idCol) === col("__tomb_id"), "left_anti")
+  /** A tombstone sidecar resolved for the anti-join: the distinct id
+    * relation, and whether its on-disk size is under the broadcast
+    * ceiling (a recursive size walk, paid once per sidecar commit). */
+  private final class Sidecar(val tombs: DataFrame, val broadcastable: Boolean)
+  private def loadSidecar(tombPath: String): Sidecar =
+    new Sidecar(
+      spark.read.parquet(tombPath).select(col("id").as("__tomb_id")).distinct(),
+      hfs.getContentSummary(new org.apache.hadoop.fs.Path(tombPath)).getLength
+        <= SidecarBroadcastMaxBytes)
+  private def dropSidecarTombs(table: DataFrame, served: Served[Sidecar],
+                               tombPath: String): DataFrame =
+    served.get().orElse {
+      // a sidecar dir without a marker is a torn first append: read it
+      // uncached rather than serve ids it may already tombstone
+      if (hfs.exists(new org.apache.hadoop.fs.Path(tombPath)))
+        Some(loadSidecar(tombPath))
+      else None
+    }.fold(table) { s =>
+      table.join(if (s.broadcastable) broadcast(s.tombs) else s.tombs,
+        col("id") === col("__tomb_id"), "left_anti")
+    }
+
+  // -----------------------------------------------------------------
+  // Serve state, resolved once per commit. Every persisted index
+  // artifact a search reads — the IVF and IVF-PQ tables (file listing
+  // and schema), the flat or hierarchical quantizer, the IVF-PQ model,
+  // the tombstone sidecars, the HNSW model row and edges table — is
+  // resolved ONCE per commit of that artifact and reused by later
+  // searches. Re-resolving per call re-lists every cluster dir (a
+  // distributed partition-discovery job above 32 dirs), re-infers the
+  // schema (one job per table) and re-collects the centroids.
+  //
+  // Each slot is keyed by its artifact's commit marker: the `_SUCCESS`
+  // file's (modification time, length), which every build, append,
+  // fold-swap and refresh rewrites. Checking the key is one driver-side
+  // getFileStatus per artifact per call and runs no Spark job. The key
+  // is read from storage, so a write through ANY instance — ingest,
+  // delete, compact, rebuild, refresh — is seen on this instance's next
+  // call; nothing is cleared by hand. The key is read BEFORE the load:
+  // a commit landing mid-load leaves an older key on newer state and
+  // costs one extra reload, never a stale hit. A missing marker (never
+  // built, or a build killed mid-write) is never cached. Two commits
+  // of one artifact must land on distinct modification times — true on
+  // stores with millisecond mtimes, where a write job outlasts a tick.
+  //
+  // Resident cost: a table slot keeps that table's file listing on the
+  // driver, O(index files) — 148 files for the 5k-row, 71-list
+  // benchmark store. The alternative is re-listing O(files) with a
+  // distributed job on every query.
+  // -----------------------------------------------------------------
+  private type Marker = (Long, Long)
+  private def marker(dir: String): Option[Marker] =
+    try {
+      val st = hfs.getFileStatus(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))
+      Some((st.getModificationTime, st.getLen))
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  /** One artifact's serve state: `load` runs once per commit of the
+    * `required` dirs (each must carry a marker, else `get` is None) and
+    * of the `optional` ones, whose presence is part of the key (a
+    * hierarchical model's super table). */
+  private final class Served[A](required: Seq[String], optional: Seq[String],
+                                load: () => A) {
+    private val cur =
+      new java.util.concurrent.atomic.AtomicReference[(Seq[Option[Marker]], A)]()
+    def get(): Option[A] = {
+      val req = required.map(marker)
+      if (req.contains(None)) { cur.set(null); None }
+      else {
+        val key = req ++ optional.map(marker)
+        val c = cur.get()
+        if (c != null && c._1 == key) Some(c._2)
+        else { val v = load(); cur.set((key, v)); Some(v) }
+      }
     }
   }
+
+  /** The committed index table at `dataDir`. A crashed compact-fold
+    * swap is resumed only when the marker is missing — the state that
+    * crash leaves — so searching a healthy table never touches a
+    * writer's in-flight `__fold` dir. */
+  private def servedTable(t: Served[DataFrame], dataDir: String): Option[DataFrame] =
+    t.get().orElse { recoverIndexFold(dataDir); t.get() }
+
+  @transient private lazy val ivfTable =
+    new Served(Seq(ivfDataPath), Nil, () => spark.read.parquet(ivfDataPath))
+  /** Flat model (Left) or, when a super table is committed, the
+    * hierarchical one (Right): `openHier` keeps large-k models lazy —
+    * counts resident, child blocks LRU-bounded by
+    * `graft.ivf.residentModelBytes`. */
+  @transient private lazy val ivfModel =
+    new Served[Either[Ivf.Model, Ivf.HierProbe]](Seq(ivfModelPath),
+      Seq(ivfSupersPath), () =>
+        if (successAt(ivfSupersPath))
+          Right(Ivf.openHier(spark, ivfModelPath, ivfSupersPath, "embedding",
+            sessionConfig.ivfResidentModelBytes))
+        else Left(Ivf.load(spark, ivfModelPath, "embedding")))
+  @transient private lazy val ivfTombs =
+    new Served(Seq(ivfTombPath), Nil, () => loadSidecar(ivfTombPath))
+  @transient private lazy val ivfPqTable =
+    new Served(Seq(ivfPqDataPath), Nil, () => spark.read.parquet(ivfPqDataPath))
+  // the model persists as ivf/ + pq/ subdirs (+ supers/ when
+  // hierarchical); the model root itself carries no marker
+  @transient private lazy val ivfPqModel =
+    new Served(Seq(s"$ivfPqModelPath/ivf", s"$ivfPqModelPath/pq"),
+      Seq(s"$ivfPqModelPath/supers"),
+      () => IvfPq.load(spark, ivfPqModelPath, "embedding"))
+  @transient private lazy val ivfPqTombs =
+    new Served(Seq(ivfPqTombPath), Nil, () => loadSidecar(ivfPqTombPath))
+
   private def clearDir(dir: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
@@ -206,8 +301,7 @@ class VectorStore private (val spark: SparkSession, val path: String,
     // the reborn row only through stale adjacency — below the
     // watermark, so never by the exact tail). built_next_id is already
     // a next-id, so it maxes in directly (no +1).
-    if (successAt(hnswModelPath))
-      next = math.max(next, hnswModel().watermark)
+    hnswModel.get().foreach(m => next = math.max(next, m.watermark))
     next
   }
   private def readNextId(): Long = {
@@ -282,30 +376,29 @@ class VectorStore private (val spark: SparkSession, val path: String,
           .write.mode("append").parquet(lshSigPath)
       }
       // IVF: stale-centroid assignment (B5 semantics) appended into
-      // the cluster-partitioned layout — searches pick the new files
-      // up through partition discovery
-      if (successAt(ivfModelPath) && indexSuccessAt(ivfDataPath)) {
+      // the cluster-partitioned layout — the append rewrites the
+      // table's commit marker, so every instance's next search
+      // re-resolves the listing and picks the new files up
+      if (indexSuccessAt(ivfDataPath)) ivfModel.get().foreach { m =>
         val proj = landed.select("id", "embedding", "content", "metadata",
           "metadata_json", "is_deleted")
         // a hierarchical model assigns through the two-level kernel
         // (O(2·√k·dim)/row) — the flat O(k·dim) scan would be the
-        // exact per-row cliff the hierarchy exists to remove
-        val assignedNew =
-          if (successAt(ivfSupersPath))
-            Ivf.assignHier(proj,
-              Ivf.loadHier(spark, ivfModelPath, ivfSupersPath, "embedding"))
-          else Ivf.assign(proj, Ivf.load(spark, ivfModelPath, "embedding"))
+        // exact per-row cliff the hierarchy exists to remove; a lazy
+        // serve model is not resident, so assignment loads it eagerly
+        val assignedNew = m match {
+          case Left(flat) => Ivf.assign(proj, flat)
+          case Right(hm: Ivf.HierModel) => Ivf.assignHier(proj, hm)
+          case Right(_) => Ivf.assignHier(proj,
+            Ivf.loadHier(spark, ivfModelPath, ivfSupersPath, "embedding"))
+        }
         assignedNew
           .repartition(col(Ivf.ClusterCol))
           .write.mode("append").partitionBy(Ivf.ClusterCol).parquet(ivfDataPath)
       }
       // IVF-PQ: encode the new rows through the persisted two-level
-      // model and append to the code table (same schema as the build).
-      // The model persists as ivf/ + pq/ SUBDIRS — gate on the inner
-      // markers, the model root itself carries no _SUCCESS
-      if (successAt(s"$ivfPqModelPath/ivf") && successAt(s"$ivfPqModelPath/pq") &&
-          indexSuccessAt(ivfPqDataPath)) {
-        val m = IvfPq.load(spark, ivfPqModelPath, "embedding")
+      // model and append to the code table (same schema as the build)
+      if (indexSuccessAt(ivfPqDataPath)) ivfPqModel.get().foreach { m =>
         IvfPq.encode(landed, "embedding", m)
           .select(col("id"), col(Ivf.ClusterCol), col(IvfPq.CodeCol),
             col("metadata"))
@@ -369,7 +462,8 @@ class VectorStore private (val spark: SparkSession, val path: String,
   def searchHnsw(query: Seq[Float], k: Int, ef: Int = 0,
                  metadataFilter: Map[String, String] = Map.empty): DataFrame = {
     val corpus = live(metadataFilter)
-    val persisted = successAt(hnswModelPath) && successAt(hnswEdgesPath)
+    val served = for (m <- hnswModel.get(); e <- hnswEdges.get()) yield (m, e)
+    val persisted = served.isDefined
     // metadata-filtered searches route by SELECTIVITY when a persisted
     // graph exists: a TIGHT filter keeps the pre-filter rebuild (shard
     // graphs over exactly the matching rows — rebuilding over a small
@@ -402,7 +496,7 @@ class VectorStore private (val spark: SparkSession, val path: String,
       // the next buildHnsw. Deletes need nothing: the live-join drops
       // tombstoned ids and the graph search skips the dangling edges
       // (the reference's B2 tolerance, hnsw.py:370-373).
-      val m = hnswModel() // instance memo — no per-call model-row read
+      val (m, edgesDf) = served.get // resolved once per commit
       // the graph was built over the UNFILTERED corpus, so the graph
       // side always walks the unfiltered rows below the watermark; a
       // filtered query over-fetches (k ÷ match fraction, 2× margin) and
@@ -415,7 +509,6 @@ class VectorStore private (val spark: SparkSession, val path: String,
       val eff0 =
         if (ef > 0) ef
         else Hnsw.scaledEf(sessionConfig.ef, liveCount(), m.parts)
-      val edgesDf = spark.read.parquet(hnswEdgesPath)
       val graphBase = unfiltered.filter(col("id") < m.watermark)
       // only the over-fetch route widens the beam (it must cover the
       // fetch window); the unfiltered path keeps its ef contract
@@ -473,32 +566,27 @@ class VectorStore private (val spark: SparkSession, val path: String,
     }
   }
 
-  /** Persisted HNSW build params + watermark, memoized per instance —
-    * `searchHnsw` previously re-read the one-row model parquet (a file
-    * listing + head job) on EVERY call. Same invalidation and
-    * cross-instance staleness contract as the live-count memo:
-    * build/refresh/mutations clear it; a writer refreshing through
-    * another instance leaves this one's watermark stale until it
-    * mutates or reopens, which can only mis-split graph vs exact-tail
-    * serving for the refresh window's ids — the merge dedup keeps
-    * results correct either way. */
+  /** Persisted HNSW build params + watermark, and the edges table
+    * (file listing and schema): serve state resolved once per commit
+    * (see "Serve state" above), keyed by the `_SUCCESS` markers
+    * [[buildHnsw]] and [[refreshHnsw]] rewrite, so a build or refresh
+    * through ANY instance moves this instance's watermark and shard
+    * count on its next call. In the window between a
+    * refresh's edge publish and its model-row write, ids past the old
+    * watermark are served by both sides of the merge, which dedups
+    * them. */
   private case class HnswModelRow(params: Hnsw.Params, parts: Int,
                                   watermark: Long)
-  @transient private lazy val hnswModelCache =
-    new java.util.concurrent.atomic.AtomicReference[HnswModelRow](null)
-  private def hnswModel(): HnswModelRow = {
-    val c = hnswModelCache.get()
-    if (c != null) c
-    else {
+  @transient private lazy val hnswModel = new Served(Seq(hnswModelPath), Nil,
+    () => {
       val mrow = spark.read.parquet(hnswModelPath).head
-      val r = HnswModelRow(
+      HnswModelRow(
         Hnsw.Params(mrow.getAs[Int]("m"), mrow.getAs[Int]("ef_construction"),
           seed = mrow.getAs[Long]("seed")),
         mrow.getAs[Int]("num_partitions"), mrow.getAs[Long]("built_next_id"))
-      hnswModelCache.set(r)
-      r
-    }
-  }
+    })
+  @transient private lazy val hnswEdges =
+    new Served(Seq(hnswEdgesPath), Nil, () => spark.read.parquet(hnswEdgesPath))
 
   private def hnswModelPath = s"$path/hnsw_model"
   private def hnswEdgesPath = s"$path/hnsw_edges"
@@ -532,7 +620,6 @@ class VectorStore private (val spark: SparkSession, val path: String,
     Seq((m, efConstruction, seed, parts, watermark))
       .toDF("m", "ef_construction", "seed", "num_partitions", "built_next_id")
       .coalesce(1).write.mode("overwrite").parquet(hnswModelPath)
-    hnswModelCache.set(HnswModelRow(params, parts, watermark))
   }
 
   /** B1 incremental through the facade: fold the exact-scan tail into
@@ -548,9 +635,10 @@ class VectorStore private (val spark: SparkSession, val path: String,
     * touched shards' adjacency — run it on a cadence, like
     * [[compact]]. */
   def refreshHnsw(): Unit = {
-    require(successAt(hnswModelPath) && successAt(hnswEdgesPath),
+    val served = hnswModel.get()
+    require(served.isDefined && successAt(hnswEdgesPath),
       "refreshHnsw needs a persisted graph — call buildHnsw() first")
-    val m = hnswModel()
+    val m = served.get
     val params = m.params
     val parts = m.parts
     val newWatermark = readNextId()
@@ -560,7 +648,6 @@ class VectorStore private (val spark: SparkSession, val path: String,
     Seq((params.m, params.efConstruction, params.seed, parts, newWatermark))
       .toDF("m", "ef_construction", "seed", "num_partitions", "built_next_id")
       .coalesce(1).write.mode("overwrite").parquet(hnswModelPath)
-    hnswModelCache.set(HnswModelRow(params, parts, newWatermark))
   }
 
   private def live(metadataFilter: Map[String, String]): DataFrame = {
@@ -652,7 +739,6 @@ class VectorStore private (val spark: SparkSession, val path: String,
       Ivf.saveHier(hm, ivfModelPath, ivfSupersPath)
       Ivf.writePartitioned(assigned, ivfDataPath)
       clearDir(ivfTombPath) // fresh table is built from live rows only
-      ivfHierCache.set(null) // serve memo must reopen the new model
       hm.flat
     } else {
       val frac =
@@ -668,7 +754,6 @@ class VectorStore private (val spark: SparkSession, val path: String,
       // a flat rebuild over an earlier hierarchical one must not leave
       // the stale super table steering ingest-time assignment
       clearDir(ivfSupersPath)
-      ivfHierCache.set(null) // serve memo must not keep the hier model
       model
     }
   }
@@ -683,12 +768,24 @@ class VectorStore private (val spark: SparkSession, val path: String,
     * lists and 0/10 at 10M / 3162 — so the default-taking path probes
     * at least [[Ivf.ScaledProbeFraction]] of the lists via
     * [[Ivf.scaledNProbe]] (identity for every index with k ≤ 100). An
-    * explicit `nProbe > 0` passes through unscaled. */
+    * explicit `nProbe > 0` passes through unscaled.
+    *
+    * Serves from state resolved once per commit (see "Serve state"
+    * above): the table's file listing and schema, the quantizer and the
+    * tombstone sidecar are reused while their `_SUCCESS` markers are
+    * unchanged, so a warm search plans the probe filter against the
+    * cached file index — partition pruning without a listing — and runs
+    * one kNN job. A write through any instance rewrites a marker and is
+    * seen on the next call. A store without a committed IVF table and
+    * model (no [[buildIvf]] yet, or one killed mid-write) fails here
+    * with that message, not deep inside the scan. */
   def searchIvf(query: Seq[Float], nProbe: Int, k: Int,
                 metadataFilter: Map[String, String] = Map.empty): DataFrame = {
-    recoverIndexFold(ivfDataPath) // resume a crashed compact-fold swap
-    val assigned = dropSidecarTombs(
-      spark.read.parquet(ivfDataPath), ivfTombPath)
+    val table = servedTable(ivfTable, ivfDataPath)
+    val model = ivfModel.get()
+    require(table.isDefined && model.isDefined,
+      s"searchIvf needs buildIvf() first — no committed IVF index under $path")
+    val assigned = dropSidecarTombs(table.get, ivfTombs, ivfTombPath)
     val pred = if (metadataFilter.isEmpty) None
       else Some(Search.metadataFilter(col("metadata"), metadataFilter))
     // a hierarchical store serves through the GROUPED model: probe
@@ -698,41 +795,17 @@ class VectorStore private (val spark: SparkSession, val path: String,
     // two-level build (14.8× rank cost at k = 316k, ScaleProbe
     // ivf_probe_rank_316k). Stores at or below FlatBuildMaxK lists
     // keep the exact flat ranking (searchHier routes internally).
-    hierModelIfPersisted() match {
-      case Some(hm) =>
+    model.get match {
+      case Right(hm) =>
         val np = if (nProbe > 0) nProbe
           else Ivf.scaledNProbe(sessionConfig.nProbe, hm.k,
             sessionConfig.ivfProbeFraction)
         Ivf.searchHier(assigned, hm, "id", query, np, k, pred)
-      case None =>
-        val model = Ivf.load(spark, ivfModelPath, "embedding")
+      case Left(flat) =>
         val np = if (nProbe > 0) nProbe
-          else Ivf.scaledNProbe(sessionConfig.nProbe, model.k,
+          else Ivf.scaledNProbe(sessionConfig.nProbe, flat.k,
             sessionConfig.ivfProbeFraction)
-        Ivf.search(assigned, model, "id", query, np, k, pred)
-    }
-  }
-
-  /** Serve-side hier model, memoized per instance — `searchIvf`
-    * previously re-collected the WHOLE child-centroid table on every
-    * call; `openHier` additionally keeps large-k models lazy (counts
-    * resident, child blocks LRU-bounded by
-    * `graft.ivf.residentModelBytes` — the r16 driver-residency
-    * perf-weak). Invalidation: [[buildIvf]] clears on either branch;
-    * same cross-instance staleness contract as the HNSW model memo. */
-  @transient private lazy val ivfHierCache =
-    new java.util.concurrent.atomic.AtomicReference[Option[Ivf.HierProbe]](null)
-  private def hierModelIfPersisted(): Option[Ivf.HierProbe] = {
-    val c = ivfHierCache.get()
-    if (c != null) c
-    else {
-      val r =
-        if (successAt(ivfSupersPath) && successAt(ivfModelPath))
-          Some(Ivf.openHier(spark, ivfModelPath, ivfSupersPath, "embedding",
-            sessionConfig.ivfResidentModelBytes))
-        else None
-      ivfHierCache.set(r)
-      r
+        Ivf.search(assigned, flat, "id", query, np, k, pred)
     }
   }
 
@@ -759,23 +832,26 @@ class VectorStore private (val spark: SparkSession, val path: String,
     * partition pruning, ADC over codes only. `rerank` > 0 fetches the
     * shortlist's raw vectors from the snapshot (a point-join on a
     * fixed-size id set) and re-scores exactly — the standard two-stage
-    * deployment. */
+    * deployment. The model, code table and sidecar are serve state
+    * resolved once per commit, as in [[searchIvf]]. */
   def searchIvfPq(query: Seq[Float], nProbe: Int, k: Int, rerank: Int = 0,
                   metadataFilter: Map[String, String] = Map.empty): DataFrame = {
     // mirror IvfPq.search's guard: this path re-purposes `rerank` as the
     // shortlist size, which would otherwise silently truncate top_k
     require(rerank <= 0 || rerank >= k,
       s"rerank ($rerank) must be 0 (off), < 0 (auto), or >= k ($k)")
-    val model = IvfPq.load(spark, ivfPqModelPath, "embedding")
+    val codes = servedTable(ivfPqTable, ivfPqDataPath)
+    val served = ivfPqModel.get()
+    require(codes.isDefined && served.isDefined,
+      s"searchIvfPq needs buildIvfPq() first — no committed IVF-PQ index under $path")
+    val model = served.get
     // nProbe <= 0 = the same scale-aware auto probing as searchIvf —
     // the coarse quantizer is the same IVF geometry, so the measured
     // 10%-of-lists rule transfers
     val np = if (nProbe > 0) nProbe
       else Ivf.scaledNProbe(sessionConfig.nProbe, model.ivf.k,
         sessionConfig.ivfProbeFraction)
-    recoverIndexFold(ivfPqDataPath) // resume a crashed compact-fold swap
-    val table = dropSidecarTombs(
-      spark.read.parquet(ivfPqDataPath), ivfPqTombPath)
+    val table = dropSidecarTombs(codes.get, ivfPqTombs, ivfPqTombPath)
     // rerank < 0 = the same scale-aware auto window as searchAdc: the
     // residual-PQ ADC ranking within the probed lists carries the same
     // quantization error the pq_recall_sweep measured at 0/10, so the
@@ -920,10 +996,12 @@ class VectorStore private (val spark: SparkSession, val path: String,
                          metadataFilter: Map[String, String]): Long =
     if (metadataFilter.isEmpty) liveCount() else corpus.count()
 
+  // This instance's mutations clear the two hand-kept memos above. The
+  // index serve state needs no clearing: it is keyed by commit marker
+  // (see "Serve state"), so it is fresh across instances.
   private def invalidateDerivedCaches(): Unit = {
     bqFilterThresholds.clear()
     liveCountCache.set(-1L)
-    hnswModelCache.set(null)
   }
 
   def searchBq(query: Seq[Float], k: Int, rerank: Int = 0,

@@ -762,4 +762,172 @@ class VectorStoreSpec extends SparkSpec {
     assert(got.toSet.intersect(exact.toSet).size >= 7,
       s"correlated-filter recall floor: got $got vs exact $exact")
   }
+
+  // ---- serve state resolved once per commit ----
+
+  private def hits(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
+    df.collect().map(r => (r.getAs[Long]("id"), r.getAs[Double]("dist"))).toSeq
+  private def rows(r: Seq[(Long, Array[Float])]) = {
+    val s = spark
+    import s.implicits._
+    r.map { case (_, v) => Tuple1(v) }.toDF("embedding")
+  }
+
+  test("serve state follows the commit markers: another instance's writes show on A's next search") {
+    val s = spark
+    val dir = Files.createTempDirectory("storeserve").toString
+    val data = corpus(300, 8)
+    val a = VectorStore.open(s, dir, dim = 8)
+    a.ingest(rows(data.take(200)))
+    a.buildIvf(8)
+    a.buildIvfPq(kClusters = 4, chunks = 4, kCodes = 4)
+    // the query is a row B ingests: its self-hit shows whether A sees
+    // the append
+    val q = data(250)._2.toSeq
+    def ivf(st: VectorStore) = hits(st.searchIvf(q, nProbe = 2, k = 5))
+    def ivfPq(st: VectorStore) = hits(st.searchIvfPq(q, nProbe = 2, k = 5))
+    // A's results (ids and distances) must equal a freshly opened
+    // instance's after every step B takes
+    def agree(step: String): Seq[(Long, Double)] = {
+      val fresh = VectorStore.open(s, dir, dim = 8)
+      val got = ivf(a)
+      assert(got == ivf(fresh), s"searchIvf after B's $step")
+      assert(ivfPq(a) == ivfPq(fresh), s"searchIvfPq after B's $step")
+      got
+    }
+    agree("nothing") // A's serve state is warm from here on
+    val b = VectorStore.open(s, dir, dim = 8)
+    b.ingest(rows(data.drop(200)))
+    val self = agree("ingest").head
+    assert(self._2 < 1e-6, "A must serve the row B ingested")
+    b.delete(Seq(self._1))
+    assert(!agree("delete").map(_._1).contains(self._1),
+      "A must drop the id B deleted")
+    b.compact()
+    agree("compact")
+    b.buildIvf(6)
+    agree("flat buildIvf")
+    b.buildIvf(12, hierarchical = Some(true))
+    agree("hierarchical buildIvf")
+    b.buildIvf(8)
+    agree("second flat buildIvf")
+    b.buildIvfPq(kClusters = 6, chunks = 4, kCodes = 8)
+    agree("buildIvfPq")
+  }
+
+  test("HNSW serve state follows another instance's refresh and rebuild (watermark and shard count)") {
+    val s = spark
+    val dir = Files.createTempDirectory("storeservehnsw").toString
+    val data = corpus(260, 8)
+    val a = VectorStore.open(s, dir, dim = 8)
+    a.ingest(rows(data.take(160)))
+    a.buildHnsw(m = 8, efConstruction = 50, numPartitions = 4)
+    // a narrow beam keeps the graph side approximate, so a stale
+    // watermark (new ids served by the exact tail instead of the graph)
+    // or a stale shard count shows in the results
+    val queries = Seq(3, 170, 200, 241).map(i => data(i)._2.toSeq)
+    def hnsw(st: VectorStore) =
+      queries.map(q => hits(st.searchHnsw(q, k = 5, ef = 5)))
+    def agree(step: String): Unit =
+      assert(hnsw(a) == hnsw(VectorStore.open(s, dir, dim = 8)),
+        s"searchHnsw after B's $step")
+    agree("nothing")
+    val b = VectorStore.open(s, dir, dim = 8)
+    b.ingest(rows(data.drop(160)))
+    agree("ingest")
+    b.refreshHnsw()
+    agree("refreshHnsw")
+    b.buildHnsw(m = 8, efConstruction = 50, numPartitions = 3)
+    agree("buildHnsw")
+  }
+
+  test("warm searchIvf runs one Spark job: no per-query listing, schema inference or model reload") {
+    val s = spark
+    val dir = Files.createTempDirectory("storewarm").toString
+    val store = VectorStore.open(s, dir, dim = 8)
+    val data = corpus(900, 8)
+    store.ingest(rows(data.take(800)))
+    val model = store.buildIvf(40)
+    val table = new java.io.File(s"$dir/vectors_by_cluster")
+    def listFiles(c: Int): Int = new java.io.File(table, s"cluster_id=$c")
+      .listFiles().count(_.getName.endsWith(".parquet"))
+    assert(table.listFiles().count(_.getName.startsWith("cluster_id=")) > 32,
+      "precondition: more cluster dirs than Spark's parallel-listing threshold")
+    val q = data(5)._2.toSeq
+    // the auto probe count, as the store derives it from the session
+    val cfg = graft.core.GraftConfig.from(
+      s.conf.getAll.filter(_._1.startsWith("graft.")))
+    val np = graft.operators.Ivf.scaledNProbe(cfg.nProbe, model.k,
+      cfg.ivfProbeFraction)
+    val filesProbed = graft.operators.Ivf.probeClusters(model, q, np)
+      .map(listFiles).sum
+    val tracker = s.sparkContext.statusTracker
+    def jobs: Seq[Int] = tracker.getJobIdsForGroup(null).toSeq
+    // statusTracker is listener-backed: settle = no growth for 300ms
+    def settled(): Seq[Int] = {
+      var last = jobs
+      var stableSince = System.nanoTime()
+      val deadline = System.nanoTime() + 5000000000L
+      while (System.nanoTime() - stableSince < 300000000L && System.nanoTime() < deadline) {
+        Thread.sleep(20)
+        val cur = jobs
+        if (cur.length != last.length) { last = cur; stableSince = System.nanoTime() }
+      }
+      last
+    }
+    def jobsOf(f: => Unit): Seq[Int] = {
+      val before = (-1 +: settled()).max
+      f
+      settled().filter(_ > before).sorted
+    }
+    def search(): Unit = { store.searchIvf(q, nProbe = 0, k = 5).collect(); () }
+    val cold = jobsOf(search())
+    val warm = jobsOf(search())
+    assert(warm.length == 1,
+      s"warm searchIvf ran ${warm.length} Spark jobs (cold: ${cold.length})")
+    assert(cold.length > warm.length,
+      "the cold search resolves the listing, schema and model")
+    val tasks = warm.flatMap(j => tracker.getJobInfo(j).toSeq.flatMap(_.stageIds))
+      .flatMap(st => tracker.getStageInfo(st).map(_.numTasks))
+    assert(tasks.nonEmpty && tasks.forall(_ <= filesProbed),
+      s"stage task counts $tasks exceed the $filesProbed files probed")
+    // an ingest rewrites the table's marker: the next search re-resolves
+    // (and may re-list) and serves the new rows; then it is warm again
+    store.ingest(rows(data.drop(800)))
+    val fresh = store.searchIvf(data(850)._2.toSeq, nProbe = model.k, k = 1)
+      .collect()
+    assert(fresh.head.getAs[Double]("dist") < 1e-6,
+      "the search after an ingest must serve the appended rows")
+    jobsOf(search())
+    assert(jobsOf(search()).length == 1, "searchIvf must be warm again")
+  }
+
+  test("searchIvf and searchIvfPq fail loudly on an unbuilt or torn index") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("storetorn").toString
+    val store = VectorStore.open(s, dir, dim = 8)
+    val data = corpus(60, 8)
+    store.ingest(data.map { case (_, v) => Tuple1(v) }.toDF("embedding"))
+    val q = data(3)._2.toSeq
+    def failsWith(msg: String)(f: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](f)
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
+    failsWith("searchIvf needs buildIvf() first")(store.searchIvf(q, 2, 3))
+    failsWith("searchIvfPq needs buildIvfPq() first")(store.searchIvfPq(q, 2, 3))
+    store.buildIvf(4)
+    store.buildIvfPq(kClusters = 4, chunks = 4, kCodes = 4)
+    assert(store.searchIvf(q, 4, 3).collect().head.getAs[Double]("dist") < 1e-6)
+    assert(store.searchIvfPq(q, 4, 3).collect().length == 3)
+    // a build killed mid-write leaves a table dir without its marker:
+    // the warm state must not be served, and the table not read as
+    // complete
+    val f = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    f.delete(new org.apache.hadoop.fs.Path(s"$dir/vectors_by_cluster/_SUCCESS"), false)
+    f.delete(new org.apache.hadoop.fs.Path(s"$dir/ivfpq_model/pq/_SUCCESS"), false)
+    failsWith("searchIvf needs buildIvf() first")(store.searchIvf(q, 2, 3))
+    failsWith("searchIvfPq needs buildIvfPq() first")(store.searchIvfPq(q, 2, 3))
+  }
 }
